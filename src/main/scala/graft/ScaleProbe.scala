@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.PersistedLayout
+
 /** One REAL scale point above sf0.1 (round-12 directive): build an sf1
   * dataset (10x sf0.1) and measure the most expensive query families at
   * both scale factors, so the documented scale shapes become measured
@@ -34,8 +36,9 @@ import org.apache.spark.sql.functions._
   *    over the same window, the realistic traffic-growth model (windows
   *    per key stay put, rows per window grow).
   *
-  * Build-if-absent under a content-keyed `_graft_ident` (the t23/s04
-  * layout discipline) so re-runs and same-session probes reuse files.
+  * Build-if-absent under a content-keyed ident
+  * ([[graft.operators.PersistedLayout]]) so re-runs and same-session
+  * probes reuse files.
   */
 object ScaleProbe {
 
@@ -45,79 +48,69 @@ object ScaleProbe {
   /** Write the sf1 tables under `outDir` if no completed build with a
     * matching ident exists. */
   def buildSf1(spark: SparkSession, srcDir: String, outDir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val ident = s"graft-scale-v2 replicas=$Replicas " +
       s"src=${Tables.contentKey(s"$srcDir/lineitem.parquet")}-" +
       Tables.contentKey(s"$srcDir/documents.parquet")
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    val identMatches = fs.exists(identPath) && {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") == ident
-      finally in.close()
-    }
-    if (identMatches) return
-    if (fs.exists(path)) fs.delete(path, true)
+    PersistedLayout.build(spark, outDir, ident) {
+      val fs = new org.apache.hadoop.fs.Path(outDir)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      // each table lands as ONE FILE named `<name>.parquet`, exactly the
+      // testdata layout — the file-stream reader's pathGlobFilter and the
+      // footer-based contentKey both address single files, so a directory
+      // layout would silently stream zero rows (measured: st07 read
+      // nothing from a directory-per-table sf1)
+      def writeSingle(df: DataFrame, name: String): Unit = {
+        val tmp = s"$outDir/_tmp_$name"
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        val tmpPath = new org.apache.hadoop.fs.Path(tmp)
+        val part = fs.listStatus(tmpPath).map(_.getPath)
+          .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+          .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
+        fs.rename(part, new org.apache.hadoop.fs.Path(s"$outDir/$name.parquet"))
+        fs.delete(tmpPath, true)
+      }
+      def replicate(name: String)(tf: (DataFrame, Int) => DataFrame): Unit = {
+        val src = Tables(spark, srcDir, name)
+        writeSingle((0 until Replicas).map(r => tf(src, r))
+          .reduce(_ unionByName _), name)
+      }
+      def off(r: Int): Long = r.toLong * KeyOff
 
-    // each table lands as ONE FILE named `<name>.parquet`, exactly the
-    // testdata layout — the file-stream reader's pathGlobFilter and the
-    // footer-based contentKey both address single files, so a directory
-    // layout would silently stream zero rows (measured: st07 read
-    // nothing from a directory-per-table sf1)
-    def writeSingle(df: DataFrame, name: String): Unit = {
-      val tmp = s"$outDir/_tmp_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      val part = fs.listStatus(tmpPath).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-      fs.rename(part, new org.apache.hadoop.fs.Path(s"$outDir/$name.parquet"))
-      fs.delete(tmpPath, true)
+      // dimensions that do not scale with the fact: verbatim copy
+      Seq("region", "nation").foreach { n =>
+        writeSingle(Tables(spark, srcDir, n), n)
+      }
+      replicate("customer")((df, r) => df
+        .withColumn("c_custkey", col("c_custkey") + off(r)))
+      replicate("supplier")((df, r) => df
+        .withColumn("s_suppkey", col("s_suppkey") + off(r)))
+      replicate("part")((df, r) => df
+        .withColumn("p_partkey", col("p_partkey") + off(r)))
+      replicate("orders")((df, r) => df
+        .withColumn("o_orderkey", col("o_orderkey") + off(r))
+        .withColumn("o_custkey", col("o_custkey") + off(r)))
+      replicate("lineitem")((df, r) => df
+        .withColumn("l_orderkey", col("l_orderkey") + off(r))
+        .withColumn("l_partkey", col("l_partkey") + off(r))
+        .withColumn("l_suppkey", col("l_suppkey") + off(r)))
+      replicate("events")((df, r) => df
+        .withColumn("event_id", col("event_id") + off(r))
+        .withColumn("user_id", col("user_id") + off(r)))
+      replicate("documents")((df, r) =>
+        (if (r == 0) df
+         else df.withColumn("text", array_join(
+           transform(split(col("text"), " "),
+             x => when(x === "", x).otherwise(concat(x, lit(s"~$r")))), " ")))
+          .withColumn("doc_id", col("doc_id") + off(r))
+          .withColumn("n_chars", length(col("text"))))
+      replicate("embeddings")((df, r) =>
+        (if (r == 0) df
+         else df.withColumn("embedding",
+           expr(s"""transform(embedding, (x, i) -> cast(x +
+                   |  (pmod(xxhash64(vec_id * 131 + i + $r), 201) - 100)
+                   |    / 1000.0 as float))""".stripMargin)))
+          .withColumn("vec_id", col("vec_id") + off(r)))
     }
-    def replicate(name: String)(tf: (DataFrame, Int) => DataFrame): Unit = {
-      val src = Tables(spark, srcDir, name)
-      writeSingle((0 until Replicas).map(r => tf(src, r))
-        .reduce(_ unionByName _), name)
-    }
-    def off(r: Int): Long = r.toLong * KeyOff
-
-    // dimensions that do not scale with the fact: verbatim copy
-    Seq("region", "nation").foreach { n =>
-      writeSingle(Tables(spark, srcDir, n), n)
-    }
-    replicate("customer")((df, r) => df
-      .withColumn("c_custkey", col("c_custkey") + off(r)))
-    replicate("supplier")((df, r) => df
-      .withColumn("s_suppkey", col("s_suppkey") + off(r)))
-    replicate("part")((df, r) => df
-      .withColumn("p_partkey", col("p_partkey") + off(r)))
-    replicate("orders")((df, r) => df
-      .withColumn("o_orderkey", col("o_orderkey") + off(r))
-      .withColumn("o_custkey", col("o_custkey") + off(r)))
-    replicate("lineitem")((df, r) => df
-      .withColumn("l_orderkey", col("l_orderkey") + off(r))
-      .withColumn("l_partkey", col("l_partkey") + off(r))
-      .withColumn("l_suppkey", col("l_suppkey") + off(r)))
-    replicate("events")((df, r) => df
-      .withColumn("event_id", col("event_id") + off(r))
-      .withColumn("user_id", col("user_id") + off(r)))
-    replicate("documents")((df, r) =>
-      (if (r == 0) df
-       else df.withColumn("text", array_join(
-         transform(split(col("text"), " "),
-           x => when(x === "", x).otherwise(concat(x, lit(s"~$r")))), " ")))
-        .withColumn("doc_id", col("doc_id") + off(r))
-        .withColumn("n_chars", length(col("text"))))
-    replicate("embeddings")((df, r) =>
-      (if (r == 0) df
-       else df.withColumn("embedding",
-         expr(s"""transform(embedding, (x, i) -> cast(x +
-                 |  (pmod(xxhash64(vec_id * 131 + i + $r), 201) - 100)
-                 |    / 1000.0 as float))""".stripMargin)))
-        .withColumn("vec_id", col("vec_id") + off(r)))
-
-    val out = fs.create(identPath, true)
-    try out.write(ident.getBytes("UTF-8")) finally out.close()
   }
 
   /** The measured families (the round-11 verdict's list, extended round
@@ -282,18 +275,11 @@ object ScaleProbe {
   private[graft] def ensureState100x(spark: SparkSession, srcDir: String,
       outDir: String): String = {
     val dir = s"$outDir/state100x"
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val ident = "graft-state100x-v1 reps=100 src=" +
       Tables.contentKey(s"$srcDir/events.parquet")
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    val identMatches = fs.exists(identPath) && {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") == ident
-      finally in.close()
-    }
-    if (!identMatches) {
-      if (fs.exists(path)) fs.delete(path, true)
+    PersistedLayout.build(spark, dir, ident) {
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sessionState.newHadoopConf())
       val src = Tables(spark, srcDir, "events")
       val tmp = s"$dir/_tmp_events"
       (0 until 100).map { r =>
@@ -307,8 +293,6 @@ object ScaleProbe {
         .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
       fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
       fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      val out = fs.create(identPath, true)
-      try out.write(ident.getBytes("UTF-8")) finally out.close()
     }
     dir
   }

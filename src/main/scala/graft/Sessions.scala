@@ -4,12 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-process scratch root under java.io.tmpdir for derived on-disk
   * layouts (IVF cell layout, z-order files, dynamic-partition tables,
-  * warehouse). Keyed by pid: the build-once `_SUCCESS`/`_graft_ident`
-  * checks those layouts rely on are not atomic ACROSS processes, so two
-  * concurrent JVMs sharing a source-keyed path could probe a
-  * half-overwritten layout. A pid component keeps the path stable within
-  * a process (build-once amortization holds for bench reps and session
-  * reuse) while giving each JVM its own directory. Cleaned on JVM exit.
+  * warehouse). Keyed by pid because [[graft.operators.PersistedLayout]]
+  * assumes one writer per directory: it makes a crashed write visible,
+  * but two JVMs that miss on the same source-keyed path would both
+  * delete and rewrite it, and appends mutate a layout in place, so no
+  * rename-on-publish could isolate them either. The pid keeps the path
+  * stable within a process (build-once amortization holds for bench reps
+  * and session reuse) while giving each JVM its own directory. Cleaned
+  * on JVM exit.
   */
 object Scratch {
   lazy val root: String = {

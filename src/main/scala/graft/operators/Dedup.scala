@@ -277,10 +277,9 @@ object Dedup {
     * corpus shuffle per batch.
     *
     * Layout under `layoutDir`: `buckets/` (band, bucket, id, shh)
-    * partitioned by `part`; `_graft_ident` written LAST (pins corpus
-    * plan + every parameter INCLUDING `maxBucket` — a crashed build is
-    * never served, a changed corpus/config/skew-cap rebuilds; same
-    * discipline as `Retrieval.bm25IndexWrite`). Buckets larger than `maxBucket`
+    * partitioned by `part`, built under [[PersistedLayout.build]]; the
+    * ident pins corpus plan + every parameter INCLUDING `maxBucket` (a
+    * changed skew cap rebuilds). Buckets larger than `maxBucket`
     * members are dropped at build (the [[minhashLsh]] skew guard —
     * boilerplate-shingle buckets would otherwise explode every probe;
     * appends do not re-check, the documented t24-style append trade).
@@ -289,32 +288,14 @@ object Dedup {
       layoutDir: String, shingleSize: Int = 3, k: Int = 128,
       bands: Int = 32, nParts: Int = 64, maxBucket: Int = 1000): Unit = {
     require(k % bands == 0, s"bands must divide k: k=$k bands=$bands")
-    val spark = docs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    // maxBucket changes which buckets survive the build-time skew guard,
-    // so it is part of the build identity: a re-run with a different cap
-    // must REBUILD, not silently serve the old layout. It rides after the
-    // shared prefix so append/probe (which take no maxBucket — the cap
-    // only acts at build) still match on lshParamIdent via startsWith.
-    // cols ride AFTER the shared prefix (append/probe match on
-    // lshParamIdent via startsWith and legitimately use their OWN batch
-    // column names — band rows normalize to (part, band, bucket, id,
-    // shh) regardless); at BUILD they are code-affecting: the same
-    // corpus plan with a different id/text column is a different layout
-    // and must rebuild, not silently ident-hit (the r15 ivfadc ADVICE
-    // class, swept across every layout round 16)
+    // maxBucket and the columns are build identity (a different skew
+    // cap keeps different buckets; a different column is a different
+    // corpus) but ride AFTER the parameter prefix: append and probe take
+    // neither and match on lshParamIdent alone
     val ident = lshParamIdent(shingleSize, k, bands, nParts) +
       s" cols=$idCol/$textCol maxBucket=$maxBucket" +
       s" corpus=${docs.queryExecution.analyzed.semanticHash()}"
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    val identMatches = fs.exists(identPath) && {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") == ident
-      finally in.close()
-    }
-    if (!identMatches) {
-      if (fs.exists(path)) fs.delete(path, true)
+    PersistedLayout.build(docs.sparkSession, layoutDir, ident) {
       val banded = lshBandRows(docs, idCol, textCol, shingleSize, k, bands,
         nParts).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -327,8 +308,6 @@ object Dedup {
           .write.mode("overwrite").partitionBy("part")
           .parquet(s"$layoutDir/buckets")
       } finally banded.unpersist()
-      val out = fs.create(identPath, true)
-      try out.write(ident.getBytes("UTF-8")) finally out.close()
     }
   }
 
@@ -354,37 +333,19 @@ object Dedup {
   /** APPEND an ingest batch's band rows to a persisted LSH layout (the
     * t24 shape): the batch becomes part of the corpus future probes
     * check against. Parameters must match the stored layout exactly
-    * (the ident pins them); a crash mid-append leaves the sentinel
-    * ident in place, so readers refuse a half-appended layout. */
+    * (the ident pins them); crash safety and retry refusal:
+    * [[PersistedLayout.append]]. */
   def lshIndexAppend(newDocs: DataFrame, idCol: String, textCol: String,
       layoutDir: String, shingleSize: Int = 3, k: Int = 128,
-      bands: Int = 32, nParts: Int = 64): Unit = {
-    val spark = newDocs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    require(fs.exists(identPath),
-      s"no LSH layout at $layoutDir (build before appending)")
-    val prevIdent = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      bands: Int = 32, nParts: Int = 64): Unit =
+    PersistedLayout.append(newDocs.sparkSession, layoutDir,
+        lshParamIdent(shingleSize, k, bands, nParts),
+        PersistedLayout.batchTag(newDocs)) {
+      Layout.clusterForWrite(
+          lshBandRows(newDocs, idCol, textCol, shingleSize, k, bands, nParts),
+          "part")
+        .write.mode("append").partitionBy("part").parquet(s"$layoutDir/buckets")
     }
-    require(prevIdent.startsWith(lshParamIdent(shingleSize, k, bands, nParts)),
-      s"layout at $layoutDir was built with different parameters " +
-        s"('$prevIdent') — probing with these would silently miss pairs; " +
-        "rebuild instead of appending")
-    def writeIdent(s: String): Unit = {
-      val out = fs.create(identPath, true)
-      try out.write(s.getBytes("UTF-8")) finally out.close()
-    }
-    writeIdent("APPENDING " + prevIdent)
-    Layout.clusterForWrite(
-        lshBandRows(newDocs, idCol, textCol, shingleSize, k, bands, nParts),
-        "part")
-      .write.mode("append").partitionBy("part").parquet(s"$layoutDir/buckets")
-    writeIdent(prevIdent +
-      s" +append=${newDocs.queryExecution.analyzed.semanticHash()}")
-  }
 
   /** Check an ingest batch for near-duplicates AGAINST the persisted
     * corpus index: every (probe, corpus) pair with exact shingle
@@ -407,16 +368,8 @@ object Dedup {
       textCol: String, shingleSize: Int = 3, k: Int = 128,
       bands: Int = 32, nParts: Int = 64,
       threshold: Double = 0.8): DataFrame = {
-    val identPath = new org.apache.hadoop.fs.Path(layoutDir, "_graft_ident")
-    val fs = identPath.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(identPath),
-      s"no completed LSH layout at $layoutDir (run lshIndexWrite first)")
-    val prevIdent = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    require(prevIdent.startsWith(lshParamIdent(shingleSize, k, bands, nParts)),
-      s"layout at $layoutDir does not match probe parameters ('$prevIdent')")
+    PersistedLayout.requireServable(spark, layoutDir,
+      lshParamIdent(shingleSize, k, bands, nParts))
     val probe = materializeOnce(lshBandRows(
       queryDocs, idCol, textCol, shingleSize, k, bands, nParts))
     val touched = probe.select(col("part")).distinct()

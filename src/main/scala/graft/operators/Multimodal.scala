@@ -385,12 +385,12 @@ object Multimodal {
     * and every ingest batch afterwards probes the stored buckets.
     *
     * Layout under `layoutDir`: `buckets/` (band, bucket, id, sig)
-    * partitioned by `part = pmod(bucket, nParts)`; `_graft_ident`
-    * written LAST, pinning every parameter INCLUDING `maxBucket` (a
-    * different skew cap keeps different buckets — it must rebuild, the
-    * d17 ADVICE lesson) plus the corpus plan hash — a crashed build is
-    * never served, a changed corpus rebuilds. Buckets above `maxBucket`
-    * members drop whole at build (the [[Dedup.simhashPairsFromSigs]]
+    * partitioned by `part = pmod(bucket, nParts)`, built under
+    * [[PersistedLayout.build]] with the `keepAppended` hit rule; the
+    * ident pins every parameter INCLUDING `maxBucket` (a different skew
+    * cap keeps different buckets) plus the corpus plan hash. Buckets
+    * above `maxBucket` members drop whole at build (the
+    * [[Dedup.simhashPairsFromSigs]]
     * skew guard — a saturated band bucket would explode every probe;
     * appends do not re-check, the documented t24-style append trade).
     *
@@ -410,16 +410,14 @@ object Multimodal {
 
   /** APPEND an ingest batch's signatures to a persisted binary-SimHash
     * layout (the batch joins the corpus future probes check against).
-    * Parameters must match the stored layout (the ident pins them); a
-    * crash mid-append leaves the APPENDING sentinel, so readers refuse
-    * a half-appended layout — the [[Dedup.lshIndexAppend]] contract. */
+    * Parameters must match the stored layout (the ident pins them);
+    * crash safety and retry refusal: [[PersistedLayout.append]]. */
   def binarySimhashIndexAppend(newMedia: DataFrame, idCol: String,
       binCol: String, layoutDir: String, gramBytes: Int = 4,
       nParts: Int = 64): Unit =
     sigIndexAppend(binarySignatures(newMedia, idCol, binCol, gramBytes),
       binarySimhashParamIdent(gramBytes, nParts),
-      newMedia.queryExecution.analyzed.semanticHash().toString,
-      layoutDir, nParts)
+      PersistedLayout.batchTag(newMedia), layoutDir, nParts)
 
   /** Check an ingest batch for binary near-duplicates AGAINST the
     * persisted corpus layout: every (probe, corpus) pair within
@@ -515,8 +513,7 @@ object Multimodal {
   def binaryDhashIndexAppend(newMedia: DataFrame, idCol: String,
       binCol: String, layoutDir: String, nParts: Int = 64): Unit =
     sigIndexAppend(binaryDhash(newMedia, idCol, binCol),
-      binaryDhashParamIdent(nParts),
-      newMedia.queryExecution.analyzed.semanticHash().toString,
+      binaryDhashParamIdent(nParts), PersistedLayout.batchTag(newMedia),
       layoutDir, nParts)
 
   /** [[binarySimhashProbeIndex]]'s contract for the dHash layout. */
@@ -529,87 +526,46 @@ object Multimodal {
   // ---- the generic persisted 64-bit-signature index: any (id, sig)
   // producer (gram-majority SimHash, gradient dHash, a future pHash
   // over real decoded pixels) gets build/append/probe with one shared
-  // discipline — bucket-partitioned band rows, skew-guarded build,
-  // ident written LAST (params + maxBucket + corpus plan hash), the
-  // APPENDING sentinel, partition-pruned broadcast probes ----
-
-  private def readIdent(fs: org.apache.hadoop.fs.FileSystem,
-      identPath: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(identPath)
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
+  // shape — bucket-partitioned band rows, skew-guarded build,
+  // partition-pruned broadcast probes ----
 
   private def sigIndexWrite(sigs: DataFrame, paramIdent: String,
       corpusHash: String, layoutDir: String, nParts: Int,
-      maxBucket: Int): Unit = {
-    val spark = sigs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val ident = paramIdent + s" maxBucket=$maxBucket corpus=$corpusHash"
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    if (fs.exists(identPath)) {
-      val stored = readIdent(fs, identPath)
-      // ident hit — INCLUDING a stored ident that differs only by
-      // completed '+append=' suffixes: re-running the original build
-      // job after appends must NOT silently delete the appended
-      // batches' signatures (an idempotency-looking call would
-      // otherwise drop them and probes would miss those pairs). A
-      // stored 'APPENDING ' prefix never matches (crashed append —
-      // the layout is untrusted and rebuilds).
-      if (stored == ident || stored.startsWith(ident + " +append=")) return
+      maxBucket: Int): Unit =
+    // keepAppended: re-running the original build job after appends must
+    // NOT delete the appended batches' signatures (probes would miss
+    // their pairs from then on)
+    PersistedLayout.build(sigs.sparkSession, layoutDir,
+        paramIdent + s" maxBucket=$maxBucket corpus=$corpusHash",
+        keepAppended = true) {
+      val banded = sigBandRows(sigs, nParts)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // skew guard at build: oversized buckets drop whole (a saturated
+        // band bucket would explode every probe; appends do not re-check
+        // — the documented t24-style append trade)
+        val keep = banded.groupBy(col("band"), col("bucket"))
+          .agg(count(lit(1)).as("_n")).filter(col("_n") <= maxBucket)
+          .select(col("band"), col("bucket"))
+        Layout.clusterForWrite(
+            banded.join(keep, Seq("band", "bucket"), "left_semi"), "part")
+          .write.mode("overwrite").partitionBy("part")
+          .parquet(s"$layoutDir/buckets")
+      } finally banded.unpersist()
     }
-    if (fs.exists(path)) fs.delete(path, true)
-    val banded = sigBandRows(sigs, nParts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // skew guard at build: oversized buckets drop whole (a saturated
-      // band bucket would explode every probe; appends do not re-check
-      // — the documented t24-style append trade)
-      val keep = banded.groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("_n")).filter(col("_n") <= maxBucket)
-        .select(col("band"), col("bucket"))
-      Layout.clusterForWrite(
-          banded.join(keep, Seq("band", "bucket"), "left_semi"), "part")
-        .write.mode("overwrite").partitionBy("part")
-        .parquet(s"$layoutDir/buckets")
-    } finally banded.unpersist()
-    val out = fs.create(identPath, true)
-    try out.write(ident.getBytes("UTF-8")) finally out.close()
-  }
 
   private def sigIndexAppend(sigs: DataFrame, paramIdent: String,
-      batchHash: String, layoutDir: String, nParts: Int): Unit = {
-    val spark = sigs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    require(fs.exists(identPath),
-      s"no signature layout at $layoutDir (build before appending)")
-    val prevIdent = readIdent(fs, identPath)
-    require(prevIdent.startsWith(paramIdent),
-      s"layout at $layoutDir was built with different parameters " +
-        s"('$prevIdent') — probing with these would silently miss pairs; " +
-        "rebuild instead of appending")
-    def writeIdent(s: String): Unit = {
-      val out = fs.create(identPath, true)
-      try out.write(s.getBytes("UTF-8")) finally out.close()
+      batchTag: String, layoutDir: String, nParts: Int): Unit =
+    PersistedLayout.append(sigs.sparkSession, layoutDir, paramIdent,
+        batchTag) {
+      Layout.clusterForWrite(sigBandRows(sigs, nParts), "part")
+        .write.mode("append").partitionBy("part").parquet(s"$layoutDir/buckets")
     }
-    writeIdent("APPENDING " + prevIdent)
-    Layout.clusterForWrite(sigBandRows(sigs, nParts), "part")
-      .write.mode("append").partitionBy("part").parquet(s"$layoutDir/buckets")
-    writeIdent(prevIdent + s" +append=$batchHash")
-  }
 
   private def sigProbeIndex(spark: SparkSession, layoutDir: String,
       probeSigs: DataFrame, paramIdent: String, nParts: Int,
       maxHamming: Int): DataFrame = {
-    val identPath = new org.apache.hadoop.fs.Path(layoutDir, "_graft_ident")
-    val fs = identPath.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(identPath),
-      s"no completed signature layout at $layoutDir (build first)")
-    require(readIdent(fs, identPath).startsWith(paramIdent),
-      s"layout at $layoutDir does not match probe parameters " +
-        s"('${readIdent(fs, identPath)}')")
+    PersistedLayout.requireServable(spark, layoutDir, paramIdent)
     val probe = Dedup.materializeOnce(sigBandRows(probeSigs, nParts))
     val touched = probe.select(col("part")).distinct()
       .collect().map(_.getLong(0)).toSeq

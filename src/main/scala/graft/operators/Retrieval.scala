@@ -432,37 +432,22 @@ object Retrieval {
     *    build pays buys join-free serving forever.
     *  - `termdf/` — (term, df), bucket-partitioned (rolled up from the
     *    postings, no second corpus pass).
-    *  - `stats/` — one row (n, avgdl).
-    *  - `_graft_ident` — written LAST: pins corpus plan + nBuckets, so a
-    *    crashed build is never served and a different corpus/bucketing
-    *    rebuilds instead of silently reusing stale postings (same ident
-    *    discipline as `Similarity.ivfBuildLayout`).
+    *  - `stats/` — one row (n, avgdl, sumdl).
+    *  - the ident ([[PersistedLayout]]) pins corpus plan + nBuckets.
     *
     * tf/dl/df/n are stored as integer-valued DOUBLES: every partial sum
     * over them is exact in any order, which is what lets
     * [[bm25TopKFromIndex]] reproduce [[bm25TopK]]'s scores bit-for-bit.
-    * Build is skipped when a completed layout with a matching ident
-    * exists — the persist-once path.
     */
   def bm25IndexWrite(
       docs: DataFrame, idCol: String, textCol: String, layoutDir: String,
       nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     val spark = docs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val ident = s"graft-bm25-v2 nBuckets=$nBuckets " +
       s"cols=$idCol/$textCol " + // code-affecting, invisible to the plan hash
       s"corpus=${docs.queryExecution.analyzed.semanticHash()}"
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    def identMatches: Boolean =
-      fs.exists(identPath) && {
-        val in = fs.open(identPath)
-        try new String(in.readAllBytes(), "UTF-8") == ident
-        finally in.close()
-      }
-    if (!identMatches) {
-      if (fs.exists(path)) fs.delete(path, true)
+    PersistedLayout.build(spark, layoutDir, ident) {
       val base = docs.select(col(idCol).as("doc_id"),
         TextOps.tokens(col(textCol)).as("toks"))
         .persist(StorageLevel.MEMORY_AND_DISK) // one corpus scan, two readers
@@ -495,8 +480,6 @@ object Retrieval {
             sum(size(col("toks")).cast("double")).as("sumdl"))
           .coalesce(1).write.mode("overwrite").parquet(s"$layoutDir/stats")
       } finally base.unpersist()
-      val out = fs.create(identPath, true)
-      try out.write(ident.getBytes("UTF-8")) finally out.close()
     }
   }
 
@@ -535,8 +518,6 @@ object Retrieval {
       .orderBy(col("rrf").desc, col("doc_id")).limit(k)
   }
 
-  private val BmAppendingSentinel = "graft-bm25-appending! "
-
   /** Incrementally APPEND a new document batch to a persisted BM25 index
     * layout — the sparse-retrieval sibling of
     * `Similarity.ivfAppendToLayout` (daily-ingest index maintenance
@@ -556,75 +537,55 @@ object Retrieval {
     * buckets' postings; the existing corpus is never scanned. Contract:
     * batch doc ids are disjoint from the indexed corpus (a re-delivered
     * doc would double-count — run d10-style incremental dedup upstream).
-    * Crash safety mirrors the IVF append: `_graft_ident` is overwritten
-    * with an `appending!` sentinel first and rewritten EXTENDED
-    * (`+append=<batch plan hash>`) only after every write lands, so a
-    * crashed append can never serve ([[bm25TopKFromIndex]] rejects the
-    * sentinel) and a base-corpus `bm25IndexWrite` call on an appended
-    * layout rebuilds instead of silently reusing it. CHAINED appends are
-    * the normal ingest cadence — an already-extended ident accepts the
-    * next batch; only a sentinel or pre-v2 layout refuses.
+    * Crash safety, identity and retry refusal: [[PersistedLayout.append]];
+    * a retried batch is refused, as it would double-count n, df and
+    * sumdl. CHAINED appends are the normal ingest cadence; only v2
+    * layouts (which carry sumdl) accept a batch.
     */
   def bm25IndexAppend(
       newDocs: DataFrame, idCol: String, textCol: String, layoutDir: String,
       nBuckets: Int = 64): Unit = {
     val spark = newDocs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    require(fs.exists(identPath),
-      s"no BM25 layout at $layoutDir (build before appending)")
-    val prevIdent = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    PersistedLayout.append(spark, layoutDir, "graft-bm25-v2",
+        PersistedLayout.batchTag(newDocs)) {
+      val base = newDocs.select(col(idCol).as("doc_id"),
+        TextOps.tokens(col(textCol)).as("toks"))
+        .persist(StorageLevel.MEMORY_AND_DISK) // one batch scan, three readers
+      try {
+        val newPost = base
+          .select(col("doc_id"), size(col("toks")).cast("double").as("dl"),
+            explode(col("toks")).as("term"))
+          .groupBy(col("term"), col("doc_id"))
+          .agg(count(lit(1)).cast("double").as("tf"), first(col("dl")).as("dl"))
+          .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
+        Layout.clusterForWrite(newPost, "bucket")
+          .write.mode("append").partitionBy("bucket")
+          .parquet(s"$layoutDir/postings")
+        // touched buckets: batch-term-grain, bounded by nBuckets
+        val touched = newPost.select(col("bucket")).distinct()
+          .collect().map(_.getLong(0)).toSeq
+        Layout.clusterForWrite(
+            spark.read.parquet(s"$layoutDir/postings")
+              .filter(col("bucket").isin(touched: _*))
+              .groupBy(col("bucket"), col("term"))
+              .agg(count(lit(1)).cast("double").as("df")),
+            "bucket")
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("bucket").parquet(s"$layoutDir/termdf")
+        // old stats collected BEFORE the overwrite touches the directory
+        val old = spark.read.parquet(s"$layoutDir/stats").collect()(0)
+        val (n0, sumdl0) =
+          (old.getAs[Double]("n"), old.getAs[Double]("sumdl"))
+        val b = base.agg(count(lit(1)).cast("double").as("nb"),
+          sum(size(col("toks")).cast("double")).as("sumdlb")).collect()(0)
+        val n2 = n0 + b.getAs[Double]("nb")
+        val sumdl2 = sumdl0 + Option(b.getAs[Double]("sumdlb")).getOrElse(0.0)
+        import spark.implicits._
+        Seq((n2, sumdl2 / n2, sumdl2)).toDF("n", "avgdl", "sumdl")
+          .coalesce(1).write.mode("overwrite").parquet(s"$layoutDir/stats")
+      } finally base.unpersist()
     }
-    require(prevIdent.startsWith("graft-bm25-v2"),
-      s"cannot append to layout at $layoutDir: '$prevIdent' — " +
-        "rebuild it (bm25IndexWrite) before appending again")
-    def writeIdent(s: String): Unit = {
-      val out = fs.create(identPath, true)
-      try out.write(s.getBytes("UTF-8")) finally out.close()
-    }
-    writeIdent(BmAppendingSentinel + prevIdent)
-    val base = newDocs.select(col(idCol).as("doc_id"),
-      TextOps.tokens(col(textCol)).as("toks"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // one batch scan, three readers
-    try {
-      val newPost = base
-        .select(col("doc_id"), size(col("toks")).cast("double").as("dl"),
-          explode(col("toks")).as("term"))
-        .groupBy(col("term"), col("doc_id"))
-        .agg(count(lit(1)).cast("double").as("tf"), first(col("dl")).as("dl"))
-        .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
-      Layout.clusterForWrite(newPost, "bucket")
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$layoutDir/postings")
-      // touched buckets: batch-term-grain, bounded by nBuckets
-      val touched = newPost.select(col("bucket")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      Layout.clusterForWrite(
-          spark.read.parquet(s"$layoutDir/postings")
-            .filter(col("bucket").isin(touched: _*))
-            .groupBy(col("bucket"), col("term"))
-            .agg(count(lit(1)).cast("double").as("df")),
-          "bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(s"$layoutDir/termdf")
-      // old stats collected BEFORE the overwrite touches the directory
-      val old = spark.read.parquet(s"$layoutDir/stats").collect()(0)
-      val (n0, sumdl0) =
-        (old.getAs[Double]("n"), old.getAs[Double]("sumdl"))
-      val b = base.agg(count(lit(1)).cast("double").as("nb"),
-        sum(size(col("toks")).cast("double")).as("sumdlb")).collect()(0)
-      val n2 = n0 + b.getAs[Double]("nb")
-      val sumdl2 = sumdl0 + Option(b.getAs[Double]("sumdlb")).getOrElse(0.0)
-      import spark.implicits._
-      Seq((n2, sumdl2 / n2, sumdl2)).toDF("n", "avgdl", "sumdl")
-        .coalesce(1).write.mode("overwrite").parquet(s"$layoutDir/stats")
-    } finally base.unpersist()
-    writeIdent(prevIdent +
-      s" +append=${newDocs.queryExecution.analyzed.semanticHash()}")
   }
 
   /** Serve a query from the PERSISTED index: reads the query terms'
@@ -644,19 +605,7 @@ object Retrieval {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(queryTerms.distinct.size == queryTerms.size,
       s"duplicate query terms would double-count: $queryTerms")
-    val fs = new org.apache.hadoop.fs.Path(layoutDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val identPath = new org.apache.hadoop.fs.Path(layoutDir, "_graft_ident")
-    require(fs.exists(identPath),
-      s"no valid BM25 index layout at $layoutDir (crashed or missing build)")
-    // a mid-append sentinel must not serve: postings may be half-appended
-    val identNow = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    require(identNow.startsWith("graft-bm25-v"),
-      s"BM25 layout at $layoutDir is mid-maintenance or corrupt: '$identNow' — " +
-        "rebuild it (bm25IndexWrite) before serving")
+    PersistedLayout.requireServable(spark, layoutDir, "graft-bm25-v")
     // bucket ids of the query terms, via the SAME hash expression the
     // build used — a LocalTableScan over Q rows, no files touched; the
     // literal IN-list is what lets the planner prune partitions
@@ -700,29 +649,16 @@ object Retrieval {
     * `pmod(xxhash64(term), nBuckets)` so a phrase query's serving scan
     * ([[phraseMatchesFromIndex]]) prunes to its terms' buckets. One
     * corpus scan; the (term, doc)-grain groupBy is the build's only
-    * corpus shuffle. Ident discipline matches bm25IndexWrite: written
-    * LAST, so a crashed build never serves, and a different corpus or
-    * bucketing rebuilds instead of silently reusing stale postings.
+    * corpus shuffle. Built under [[PersistedLayout.build]].
     */
   def positionalIndexWrite(
       docs: DataFrame, idCol: String, textCol: String, layoutDir: String,
       nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    val spark = docs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val ident = s"graft-pos-v1 nBuckets=$nBuckets " +
       s"cols=$idCol/$textCol " + // code-affecting, invisible to the plan hash
       s"corpus=${docs.queryExecution.analyzed.semanticHash()}"
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    def identMatches: Boolean =
-      fs.exists(identPath) && {
-        val in = fs.open(identPath)
-        try new String(in.readAllBytes(), "UTF-8") == ident
-        finally in.close()
-      }
-    if (!identMatches) {
-      if (fs.exists(path)) fs.delete(path, true)
+    PersistedLayout.build(docs.sparkSession, layoutDir, ident) {
       Layout.clusterForWrite(docs
           .select(col(idCol).as("doc_id"),
             posexplode(TextOps.tokens(col(textCol))).as(Seq("pos", "term")))
@@ -733,8 +669,6 @@ object Retrieval {
           "bucket")
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$layoutDir/postings")
-      val out = fs.create(identPath, true)
-      try out.write(ident.getBytes("UTF-8")) finally out.close()
     }
   }
 
@@ -756,18 +690,7 @@ object Retrieval {
       spark: org.apache.spark.sql.SparkSession, layoutDir: String,
       phrase: Seq[String], nBuckets: Int = 64): DataFrame = {
     require(phrase.nonEmpty, "phrase must be non-empty")
-    val fs = new org.apache.hadoop.fs.Path(layoutDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val identPath = new org.apache.hadoop.fs.Path(layoutDir, "_graft_ident")
-    require(fs.exists(identPath),
-      s"no valid positional index layout at $layoutDir (crashed or missing build)")
-    val identNow = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    require(identNow.startsWith("graft-pos-v"),
-      s"positional layout at $layoutDir is corrupt: '$identNow' — " +
-        "rebuild it (positionalIndexWrite) before serving")
+    PersistedLayout.requireServable(spark, layoutDir, "graft-pos-v")
     import spark.implicits._
     val terms = phrase.distinct
     val buckets = terms.toDF("term")

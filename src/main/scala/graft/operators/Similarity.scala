@@ -296,11 +296,11 @@ object Similarity {
   /** Build the persisted IVF layout: cell assignment written partitioned
     * by cell id, plus the centroid table under `layoutDir/_centroids`
     * (underscore prefix = invisible to Spark's file index when the
-    * assignment is read back, like `_SUCCESS`). Skipped when a completed
-    * layout (`_SUCCESS` marker) is already present — the whole point of
-    * the layout is that assignment cost is paid ONCE and every later
-    * query batch only probes. Carrying the centroids in the layout means
-    * the serving path never touches the corpus at all.
+    * assignment is read back, like `_SUCCESS`). Skipped when a layout
+    * with a matching ident exists ([[PersistedLayout]]) — the whole
+    * point of the layout is that assignment cost is paid ONCE and every
+    * later query batch only probes. Carrying the centroids in the layout
+    * means the serving path never touches the corpus at all.
     *
     * `centroids` chooses the cell construction: None = the deterministic
     * modulo subset (SQL-oracle-expressible, the s04 gate's path); Some =
@@ -311,44 +311,26 @@ object Similarity {
       corpus: DataFrame, centEvery: Int, layoutDir: String,
       idCol: String = "vec_id", embCol: String = "embedding",
       centroids: Option[DataFrame] = None): Unit = {
-    val spark = corpus.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    // layout identity: a completed write (_SUCCESS) is only reusable if
-    // it was built for the SAME logical corpus and cell construction — a
+    // the ident pins the logical corpus (semanticHash of its plan:
+    // source paths, filters, projection) and the cell construction — a
     // stale layout probed with fresh centroids would silently return
-    // wrong neighbors. semanticHash pins the corpus PLAN (source paths,
-    // filters, projection) and, for supplied centroids, the centroid
-    // plan; data rewritten in place under the same path is the caller's
-    // cache-invalidation to signal (delete the dir or key it by file
-    // identity, as the s04 gate does).
-    // v2: layouts now carry their centroid table; v1 layouts (no
-    // _centroids dir) fail the ident check and rebuild
+    // wrong neighbors. Data rewritten in place under the same path is the
+    // caller's cache-invalidation to signal (delete the dir or key it by
+    // file identity, as the s04 gate does).
     val centIdent = centroids
       .map(c => s"cent=${c.queryExecution.analyzed.semanticHash()}")
       .getOrElse(s"centEvery=$centEvery")
     val ident = s"graft-ivf-v2 $centIdent " +
       s"cols=$idCol/$embCol " + // code-affecting, invisible to the plan hash
       s"corpus=${corpus.queryExecution.analyzed.semanticHash()}"
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    def identMatches: Boolean =
-      fs.exists(identPath) && {
-        val in = fs.open(identPath)
-        try new String(in.readAllBytes(), "UTF-8") == ident
-        finally in.close()
-      }
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")) ||
-        !identMatches) {
+    PersistedLayout.build(corpus.sparkSession, layoutDir, ident) {
       val cent = centroids.getOrElse(
         ivfCentroids(corpus, centEvery, idCol, embCol))
       Layout.clusterForWrite(ivfAssign(corpus, cent, idCol, embCol), "c_id")
         .write.mode("overwrite").partitionBy("c_id").parquet(layoutDir)
-      // centroids AFTER the assignment (overwrite above recreates the
-      // dir), ident marker last — a crash mid-build leaves no valid ident
+      // centroids AFTER the assignment: its overwrite recreates the dir
       cent.coalesce(1).write.mode("overwrite")
         .parquet(s"$layoutDir/_centroids")
-      val out = fs.create(identPath, true)
-      try out.write(ident.getBytes("UTF-8")) finally out.close()
     }
   }
 
@@ -383,74 +365,26 @@ object Similarity {
     * drifts only as the ingested distribution drifts from the build-time
     * one, and a rebuild (or centroid re-train) resets it.
     *
-    * Crash safety / identity: before the append the layout's
-    * `_graft_ident` is overwritten with an `appending!` SENTINEL (old
-    * ident preserved inside it), and only after the append commits is the
-    * extended ident (`+append=<batch plan hash>`) written. A crash
-    * mid-append therefore leaves a sentinel that every reader can
-    * DISTINGUISH from a valid layout: [[ivfTopKServing]] and a repeat
-    * append refuse it with "crashed/in-progress", and the next
-    * [[ivfBuildLayout]] mismatches it and rebuilds — a half-appended
-    * layout is never silently probed. A later build call keyed to the
-    * ORIGINAL corpus also mismatches the extended ident and rebuilds,
-    * which is the conservative correct answer once the layout holds
-    * extra rows.
-    *
-    * Concurrency: the sentinel also closes the window the
-    * delete-then-rewrite scheme had — a concurrent serving call during
-    * the append window now fails with the explicit in-progress message
-    * rather than a bare missing-ident error. Single-writer remains the
-    * contract (one appender at a time; readers get fail-fast, not
-    * isolation — a serving tier wanting reads DURING maintenance
-    * snapshots the layout dir first).
-    *
-    * Idempotency under retry (round 19): the normal failure mode the
-    * sentinel exists for is an orchestrator RETRYING a batch whose
-    * first attempt died after the commit — without a guard the retry
-    * silently appends the same codes twice and every later probe
-    * returns duplicate ids in its top-k. The ident already records
-    * every committed batch (`+append=<batch plan hash>`), so a batch
-    * whose hash is ALREADY recorded is refused fail-fast; `force =
-    * true` is the explicit escape hatch for the rare legitimate
-    * re-append of an identical plan (e.g. a source whose content
-    * changed under the same path — the plan hash keys the PLAN, not
-    * the bytes).
+    * Crash safety, identity and retry refusal: [[PersistedLayout.append]].
+    * A later build call keyed to the ORIGINAL corpus mismatches the
+    * extended ident and rebuilds. `force = true` re-appends a batch whose
+    * plan is already recorded (e.g. a source whose content changed under
+    * the same path — the tag keys the PLAN, not the bytes).
     */
-  private val AppendingSentinel = "graft-ivf-appending! "
-
   def ivfAppendToLayout(
       newVecs: DataFrame, layoutDir: String,
       idCol: String = "vec_id", embCol: String = "embedding",
       force: Boolean = false): Unit = {
     val spark = newVecs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    require(fs.exists(identPath),
-      s"no valid IVF layout at $layoutDir (build before appending)")
-    val ident = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    PersistedLayout.append(spark, layoutDir, IvfPrefix,
+        PersistedLayout.batchTag(newVecs), force) {
+      val cent = spark.read.parquet(s"$layoutDir/_centroids")
+      Layout.clusterForWrite(ivfAssign(newVecs, cent, idCol, embCol), "c_id")
+        .write.mode("append").partitionBy("c_id").parquet(layoutDir)
     }
-    require(!ident.startsWith(AppendingSentinel),
-      s"IVF layout at $layoutDir has a crashed or in-progress append — " +
-        "rebuild it (ivfBuildLayout) before appending again")
-    def writeIdent(s: String): Unit = {
-      val out = fs.create(identPath, true)
-      try out.write(s.getBytes("UTF-8")) finally out.close()
-    }
-    val batchTag = s"+append=${newVecs.queryExecution.analyzed.semanticHash()}"
-    require(force || !ident.split(' ').contains(batchTag),
-      s"batch already appended to $layoutDir ($batchTag recorded in the " +
-        "ident) — a retried append would duplicate its rows in every " +
-        "probe's top-k; pass force = true to append it again anyway")
-    val newIdent = s"$ident $batchTag"
-    writeIdent(AppendingSentinel + ident)
-    val cent = spark.read.parquet(s"$layoutDir/_centroids")
-    Layout.clusterForWrite(ivfAssign(newVecs, cent, idCol, embCol), "c_id")
-      .write.mode("append").partitionBy("c_id").parquet(layoutDir)
-    writeIdent(newIdent)
   }
+
+  private val IvfPrefix = "graft-ivf-v"
 
   /** Pure serving-path probe of an existing layout: no corpus argument at
     * all — reads the layout's centroid table plus the probed cells'
@@ -461,7 +395,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, queries: DataFrame,
       k: Int, nProbe: Int, layoutDir: String,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    requireServableLayout(spark, layoutDir)
+    PersistedLayout.requireServable(spark, layoutDir, IvfPrefix)
     val cent = spark.read.parquet(s"$layoutDir/_centroids")
     val layout = spark.read.parquet(layoutDir)
     ivfRank(layout, ivfProbe(queries, cent, nProbe, idCol, embCol), k)
@@ -483,28 +417,11 @@ object Similarity {
       k: Int, lo: Double, hi: Double, nProbe: Int, layoutDir: String,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
     require(lo < hi, s"empty band [$lo, $hi)")
-    requireServableLayout(spark, layoutDir)
+    PersistedLayout.requireServable(spark, layoutDir, IvfPrefix)
     val cent = spark.read.parquet(s"$layoutDir/_centroids")
     val layout = spark.read.parquet(layoutDir)
     ivfRank(layout, ivfProbe(queries, cent, nProbe, idCol, embCol), k,
       band = Some((lo, hi)))
-  }
-
-  /** The serving-path precondition: an ident exists and is not the
-    * mid-append sentinel (crashed or concurrent maintenance). */
-  private def requireServableLayout(
-      spark: org.apache.spark.sql.SparkSession, layoutDir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    require(fs.exists(identPath), s"no valid IVF layout at $layoutDir")
-    val ident = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    require(!ident.startsWith(AppendingSentinel),
-      s"IVF layout at $layoutDir has an in-progress or crashed append — " +
-        "not servable until rebuilt or the append commits")
   }
 
   /** Lloyd-refined IVF centroids: start from the deterministic modulo
@@ -1586,11 +1503,8 @@ object Similarity {
     * paid ONCE: the PQ CODES of every corpus vector written PARTITIONED
     * BY CELL (the only per-vector state ADC serving reads — m small
     * ints instead of d floats), plus the centroid table
-    * (`_centroids/`) and the codebook (`_pqmodel/`), under the
-    * ident-written-last crash discipline ([[ivfBuildLayout]] /
-    * `Multimodal.sigIndexWrite`): a crashed build leaves no valid
-    * ident and is never served; a changed corpus or parameter set
-    * mismatches and rebuilds. `model` is BY-NAME — on an ident hit
+    * (`_centroids/`) and the codebook (`_pqmodel/`), under
+    * [[PersistedLayout.build]]. `model` is BY-NAME — on an ident hit
     * (the steady state) the codebook is never trained or evaluated,
     * so repeat build calls cost one ident read.
     *
@@ -1606,80 +1520,64 @@ object Similarity {
       quantScale: Long = 1000L, trainedIters: Int = 0)(
       model: => PqModel): Unit = {
     val spark = corpus.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     // EVERY code-affecting parameter lives in the ident: idCol/embCol
     // change which columns the codes were built from even when the
-    // corpus PLAN (hence its semanticHash) is unchanged — omitting them
-    // would make a column switch a silent ident hit serving stale codes
-    // (ADVICE r15). The quantizer KIND is stamped the same way
-    // (round 19): `coarse=trainedExact:<iters>` cells place codes in
-    // different partitions than modulo cells, so a kind switch must
-    // rebuild, never ident-hit. trainedIters = 0 keeps the modulo
+    // corpus PLAN (hence its semanticHash) is unchanged, and
+    // `coarse=trainedExact:<iters>` cells place codes in different
+    // partitions than modulo cells. trainedIters = 0 keeps the modulo
     // ident byte-identical to v2 so existing layouts stay warm.
     val coarseTag =
       if (trainedIters > 0) s" coarse=trainedExact:$trainedIters" else ""
     val ident = s"graft-ivfadc-v2 centEvery=$centEvery m=$m k=$k " +
       s"quantScale=$quantScale idCol=$idCol embCol=$embCol$coarseTag " +
       s"corpus=${corpus.queryExecution.analyzed.semanticHash()}"
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    val identMatches = fs.exists(identPath) && {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") == ident
-      finally in.close()
+    PersistedLayout.build(spark, layoutDir, ident) {
+      val mdl = model
+      require(mdl.m == m && mdl.k == k && mdl.quantScale == quantScale,
+        s"model (m=${mdl.m}, k=${mdl.k}, quantScale=${mdl.quantScale}) " +
+          s"does not match the layout parameters (m=$m, k=$k, " +
+          s"quantScale=$quantScale)")
+      // the coarse quantizer: modulo seeds (the v2 default) or the s22
+      // engine-exact Lloyd cells dequantized into (c_id, c_emb) — the
+      // serving tier is geometry-agnostic (it reads _centroids and ranks
+      // by cosine either way), so ONLY the build chooses; training cost
+      // is one corpus pass per iteration, paid once per ident
+      val cent =
+        if (trainedIters > 0)
+          // no extra checkpoint: the trainer's final iteration is already
+          // a localCheckpoint, and the dequant on top is a cheap map over
+          // |cells| rows — both consumers (the assignment broadcast and
+          // the _centroids write) re-run only that map over the
+          // checkpointed blocks
+          trainedCentroidsExactDequant(corpus, centEvery, trainedIters,
+            idCol, embCol, quantScale)
+        else ivfCentroids(corpus, centEvery, idCol, embCol)
+      // codes are the EXACT encode expression the probe contract is
+      // defined against ([[codesFromVq]] over [[vqExpr]] — the single
+      // shared definition pqEncode itself uses, so the persisted codes
+      // cannot drift from the inline ivfAdcTopK results), attached
+      // DIRECTLY to the assignment output: an id-keyed join of
+      // pqEncode(assign) back onto assign would evaluate the corpus-grain
+      // assignment aggregate twice — this is one scan, one exchange, one
+      // write
+      Layout.clusterForWrite(ivfAssign(corpus, cent, idCol, embCol)
+        .select(col("c_id"), col("n_id").as("id"),
+          codesFromVq(mdl, vqExpr("n_emb", mdl.quantScale)).as("codes")),
+        "c_id")
+        .write.mode("overwrite").partitionBy("c_id")
+        .parquet(s"$layoutDir/codes")
+      cent.coalesce(1).write.mode("overwrite")
+        .parquet(s"$layoutDir/_centroids")
+      import spark.implicits._
+      spark.createDataset(for {
+          s <- 0 until mdl.m; c <- 0 until mdl.k
+        } yield (s, c, mdl.cents(s)(c).toSeq))
+        .toDF("sub", "code", "c")
+        .coalesce(1).write.mode("overwrite").parquet(s"$layoutDir/_pqmodel")
     }
-    if (identMatches) return
-    if (fs.exists(path)) fs.delete(path, true)
-    val mdl = model
-    require(mdl.m == m && mdl.k == k && mdl.quantScale == quantScale,
-      s"model (m=${mdl.m}, k=${mdl.k}, quantScale=${mdl.quantScale}) " +
-        s"does not match the layout parameters (m=$m, k=$k, " +
-        s"quantScale=$quantScale)")
-    // the coarse quantizer: modulo seeds (the v2 default) or the s22
-    // engine-exact Lloyd cells dequantized into (c_id, c_emb) — the
-    // serving tier is geometry-agnostic (it reads _centroids and ranks
-    // by cosine either way), so ONLY the build chooses; training cost
-    // is one corpus pass per iteration, paid once per ident
-    val cent =
-      if (trainedIters > 0)
-        // no extra checkpoint: the trainer's final iteration is already
-        // a localCheckpoint, and the dequant on top is a cheap map over
-        // |cells| rows — both consumers (the assignment broadcast and
-        // the _centroids write) re-run only that map over the
-        // checkpointed blocks (round 20; the outer eager checkpoint
-        // paid one more materialization job per build)
-        trainedCentroidsExactDequant(corpus, centEvery, trainedIters,
-          idCol, embCol, quantScale)
-      else ivfCentroids(corpus, centEvery, idCol, embCol)
-    // codes are the EXACT encode expression the probe contract is
-    // defined against ([[codesFromVq]] over [[vqExpr]] — the single
-    // shared definition pqEncode itself uses, so the persisted codes
-    // cannot drift from the inline ivfAdcTopK results), attached
-    // DIRECTLY to the assignment output: the former id-keyed join of
-    // pqEncode(assign) back onto assign evaluated the corpus-grain
-    // assignment aggregate TWICE (the two join sides are different
-    // projections over it, so no exchange reuse) and paid a both-sides
-    // corpus-grain shuffle — one scan, one exchange, one write now
-    // (round 19; before/after in OPTIMIZATION_r19.md)
-    Layout.clusterForWrite(ivfAssign(corpus, cent, idCol, embCol)
-      .select(col("c_id"), col("n_id").as("id"),
-        codesFromVq(mdl, vqExpr("n_emb", mdl.quantScale)).as("codes")),
-      "c_id")
-      .write.mode("overwrite").partitionBy("c_id")
-      .parquet(s"$layoutDir/codes")
-    cent.coalesce(1).write.mode("overwrite")
-      .parquet(s"$layoutDir/_centroids")
-    import spark.implicits._
-    spark.createDataset(for {
-        s <- 0 until mdl.m; c <- 0 until mdl.k
-      } yield (s, c, mdl.cents(s)(c).toSeq))
-      .toDF("sub", "code", "c")
-      .coalesce(1).write.mode("overwrite").parquet(s"$layoutDir/_pqmodel")
-    val out = fs.create(identPath, true)
-    try out.write(ident.getBytes("UTF-8")) finally out.close()
   }
 
-  private val AdcAppendingSentinel = "graft-ivfadc-appending! "
+  private val AdcPrefix = "graft-ivfadc-v"
 
   /** Append a batch into a persisted IVFADC layout ([[ivfAdcBuildLayout]])
     * WITHOUT touching the existing corpus — the daily-ingest path the
@@ -1694,55 +1592,48 @@ object Similarity {
     * broadcasts of the kB-sized centroids and codebook; the existing
     * codes are never read.
     *
-    * Crash safety / identity / concurrency: the [[ivfAppendToLayout]]
-    * sentinel discipline verbatim — `_graft_ident` holds an
-    * `appending!` sentinel during the append (probe and re-append
-    * refuse it fail-fast; a later build mismatches and rebuilds), and
-    * the extended ident (`+append=<batch plan hash>`) is written only
-    * after the append commits. Single writer; readers wanting
-    * isolation during maintenance snapshot the layout dir first.
-    * A batch whose `+append` hash is already recorded in the ident is
-    * refused fail-fast (a retried append would silently duplicate its
-    * codes in every probe's top-k — the [[ivfAppendToLayout]]
-    * idempotency rule); `force = true` overrides.
+    * Crash safety, identity and retry refusal: [[PersistedLayout.append]];
+    * `force = true` re-appends a batch whose plan is already recorded.
     */
   def ivfAdcAppendToLayout(newVecs: DataFrame, layoutDir: String,
       idCol: String = "vec_id", embCol: String = "embedding",
       force: Boolean = false): Unit = {
     val spark = newVecs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    require(fs.exists(identPath),
-      s"no valid IVFADC layout at $layoutDir (build before appending)")
-    val ident = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    val quantScale = ivfAdcLayoutQuantScale(spark, layoutDir)
+    PersistedLayout.append(spark, layoutDir, AdcPrefix,
+        PersistedLayout.batchTag(newVecs), force) {
+      // the layout's frozen geometry: centroids for assignment, codebook
+      // for encoding — both kB-scale reads, broadcast into the batch pass
+      val cent = spark.read.parquet(s"$layoutDir/_centroids")
+      val model = ivfAdcLayoutModel(spark, layoutDir, quantScale)
+      // codes attach directly to the batch assignment (the build-path
+      // rule: [[codesFromVq]] over [[vqExpr]] is pqEncode's own
+      // expression) — one batch pass, one exchange, one append
+      Layout.clusterForWrite(ivfAssign(newVecs, cent, idCol, embCol)
+        .select(col("c_id"), col("n_id").as("id"),
+          codesFromVq(model, vqExpr("n_emb", model.quantScale)).as("codes")),
+        "c_id")
+        .write.mode("append").partitionBy("c_id")
+        .parquet(s"$layoutDir/codes")
     }
-    require(!ident.startsWith(AdcAppendingSentinel),
-      s"IVFADC layout at $layoutDir has a crashed or in-progress " +
-        "append — rebuild it (ivfAdcBuildLayout) before appending again")
-    require(ident.startsWith("graft-ivfadc-v1 ") ||
-        ident.startsWith("graft-ivfadc-v2 "),
-      s"layout at $layoutDir is not an IVFADC layout ('$ident')")
-    def writeIdent(s: String): Unit = {
-      val out = fs.create(identPath, true)
-      try out.write(s.getBytes("UTF-8")) finally out.close()
-    }
-    val quantScale = raw"quantScale=(\d+)".r.findFirstMatchIn(ident)
+  }
+
+  /** The quantScale a servable IVFADC layout's codes were built with —
+    * shared by append and both probes so all quantize against the EXACT
+    * scale of the stored codes. v1 layouts stay servable: v2 only added
+    * idCol/embCol to the build key. */
+  private def ivfAdcLayoutQuantScale(spark: SparkSession,
+      layoutDir: String): Long = {
+    val ident = PersistedLayout.requireServable(spark, layoutDir, AdcPrefix)
+    raw"quantScale=(\d+)".r.findFirstMatchIn(ident)
       .map(_.group(1).toLong)
       .getOrElse(throw new IllegalArgumentException(
         s"malformed IVFADC ident '$ident'"))
-    val batchTag = s"+append=${newVecs.queryExecution.analyzed.semanticHash()}"
-    require(force || !ident.split(' ').contains(batchTag),
-      s"batch already appended to $layoutDir ($batchTag recorded in the " +
-        "ident) — a retried append would duplicate its codes in every " +
-        "probe's top-k; pass force = true to append it again anyway")
-    val newIdent = s"$ident $batchTag"
-    writeIdent(AdcAppendingSentinel + ident)
-    // the layout's frozen geometry: centroids for assignment, codebook
-    // for encoding — both kB-scale reads, broadcast into the batch pass
-    val cent = spark.read.parquet(s"$layoutDir/_centroids")
+  }
+
+  /** The layout's frozen codebook, rebuilt from `_pqmodel` (m·k rows). */
+  private def ivfAdcLayoutModel(spark: SparkSession, layoutDir: String,
+      quantScale: Long): PqModel = {
     val mrows = spark.read.parquet(s"$layoutDir/_pqmodel")
       .select(col("sub").cast("int"), col("code").cast("int"), col("c"))
       .collect()
@@ -1751,18 +1642,7 @@ object Similarity {
     val subDim = mrows.head.getSeq[Long](2).length
     val cents = Array.ofDim[Array[Long]](m, k)
     mrows.foreach(r => cents(r.getInt(0))(r.getInt(1)) = r.getSeq[Long](2).toArray)
-    val model = PqModel(m, subDim, k, quantScale, cents)
-    // codes attach directly to the batch assignment (the build-path
-    // rule: [[codesFromVq]] over [[vqExpr]] is pqEncode's own
-    // expression, and the former id-join re-evaluated the assignment
-    // aggregate twice) — one batch pass, one exchange, one append
-    Layout.clusterForWrite(ivfAssign(newVecs, cent, idCol, embCol)
-      .select(col("c_id"), col("n_id").as("id"),
-        codesFromVq(model, vqExpr("n_emb", model.quantScale)).as("codes")),
-      "c_id")
-      .write.mode("append").partitionBy("c_id")
-      .parquet(s"$layoutDir/codes")
-    writeIdent(newIdent)
+    PqModel(m, subDim, k, quantScale, cents)
   }
 
   /** Serve one query from a persisted IVFADC layout
@@ -1779,44 +1659,11 @@ object Similarity {
     * @return (id, adc) — integer squared-L2 estimate ascending, ties
     *         by id, ≤ `kNN` rows from the probed cells.
     */
-  /** Read + validate an IVFADC layout's ident and return its
-    * quantScale — shared by the ADC probe and the rerank probe so both
-    * quantize against the EXACT scale the codes were built with. */
-  private def ivfAdcLayoutQuantScale(spark: SparkSession,
-      layoutDir: String): Long = {
-    val identPath = new org.apache.hadoop.fs.Path(layoutDir, "_graft_ident")
-    val fs = identPath.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(identPath),
-      s"no completed IVFADC layout at $layoutDir (build first)")
-    val ident = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    // v1 layouts stay servable — the v2 ident only ADDED idCol/embCol
-    // to the build key (ADVICE r15); nothing the probe reads changed
-    require(ident.startsWith("graft-ivfadc-v1 ") ||
-        ident.startsWith("graft-ivfadc-v2 "),
-      s"layout at $layoutDir is not an IVFADC layout ('$ident')")
-    raw"quantScale=(\d+)".r.findFirstMatchIn(ident)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalArgumentException(
-        s"malformed IVFADC ident '$ident'"))
-  }
-
   def ivfAdcProbeLayout(spark: SparkSession, layoutDir: String,
       query: Seq[Double], kNN: Int = 10, nProbe: Int = 2): DataFrame = {
     require(kNN >= 1 && nProbe >= 1, s"bad probe params kNN=$kNN nProbe=$nProbe")
-    val quantScale = ivfAdcLayoutQuantScale(spark, layoutDir)
-    // rebuild the codebook from the layout — m·k bounded rows
-    val mrows = spark.read.parquet(s"$layoutDir/_pqmodel")
-      .select(col("sub").cast("int"), col("code").cast("int"), col("c"))
-      .collect()
-    val m = mrows.map(_.getInt(0)).max + 1
-    val k = mrows.map(_.getInt(1)).max + 1
-    val subDim = mrows.head.getSeq[Long](2).length
-    val cents = Array.ofDim[Array[Long]](m, k)
-    mrows.foreach(r => cents(r.getInt(0))(r.getInt(1)) = r.getSeq[Long](2).toArray)
-    val model = PqModel(m, subDim, k, quantScale, cents)
+    val model = ivfAdcLayoutModel(spark, layoutDir,
+      ivfAdcLayoutQuantScale(spark, layoutDir))
     val qLit = array(query.map(lit): _*)
     val cells = spark.read.parquet(s"$layoutDir/_centroids")
       .withColumn("ccos", round(cosine(qLit, col("c_emb")), 5))

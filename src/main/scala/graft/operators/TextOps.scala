@@ -323,29 +323,17 @@ object TextOps {
     * buckets its own bigrams touch; `stats/` one row (v = distinct
     * token count, the smoothing denominator). Heads roll up from the
     * WRITTEN bigrams (read-back — no second corpus pass, and c1 counts
-    * exactly what serving will scan). `_graft_ident` (nBuckets +
-    * corpus plan hash) written LAST: a crashed build is never served,
-    * a changed corpus/config rebuilds, a matching complete layout is
-    * reused untouched.
+    * exactly what serving will scan). Built under
+    * [[PersistedLayout.build]]; the ident pins nBuckets + corpus plan.
     */
   def lmIndexWrite(docs: DataFrame, textCol: String, layoutDir: String,
       nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
     val spark = docs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val ident = s"graft-lm-v1 nBuckets=$nBuckets " +
       s"cols=$textCol " + // code-affecting, invisible to the plan hash
       s"corpus=${docs.queryExecution.analyzed.semanticHash()}"
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    def identMatches: Boolean =
-      fs.exists(identPath) && {
-        val in = fs.open(identPath)
-        try new String(in.readAllBytes(), "UTF-8") == ident
-        finally in.close()
-      }
-    if (!identMatches) {
-      if (fs.exists(path)) fs.delete(path, true)
+    PersistedLayout.build(spark, layoutDir, ident) {
       val base = docs.select(tokens(col(textCol)).as("toks"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -371,8 +359,6 @@ object TextOps {
           .agg(countDistinct(col("t")).as("v"))
           .coalesce(1).write.mode("overwrite").parquet(s"$layoutDir/stats")
       } finally base.unpersist()
-      val out = fs.create(identPath, true)
-      try out.write(ident.getBytes("UTF-8")) finally out.close()
     }
   }
 
@@ -393,6 +379,7 @@ object TextOps {
   def lmScoreFromIndex(spark: org.apache.spark.sql.SparkSession,
       layoutDir: String, docs: DataFrame, idCol: String,
       textCol: String, nBuckets: Int = 64): DataFrame = {
+    PersistedLayout.requireServable(spark, layoutDir, "graft-lm-v")
     val probe = docs
       .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
       .filter(size(col("toks")) >= 2)
@@ -695,13 +682,10 @@ object TextOps {
     } finally loop.abort()
   }
 
-  /** Persist the BPE merge table as a build-once layout artifact (the
-    * t23/s04 `_graft_ident` discipline): train [[bpeTrain]]'s merges and
-    * write them under `layoutDir/merges`, skipped entirely when a
-    * COMPLETED layout with a matching ident already exists. The ident
-    * pins corpus plan + nMerges + minCount, written LAST — a crashed
-    * build is never served, a different corpus/config rebuilds instead
-    * of silently reusing stale merges.
+  /** Persist the BPE merge table as a build-once layout artifact
+    * ([[PersistedLayout.build]]): train [[bpeTrain]]'s merges and write
+    * them under `layoutDir/merges`. The ident pins corpus plan + nMerges
+    * + minCount.
     *
     * This is the missing half of the tokenizer pipeline shape: training
     * runs once per corpus version (M driver-loop argmax rounds), every
@@ -711,45 +695,34 @@ object TextOps {
     */
   def bpeTrainLayout(docs: DataFrame, textCol: String, nMerges: Int,
       minCount: Long, layoutDir: String): Unit = {
-    val spark = docs.sparkSession
-    val path = new org.apache.hadoop.fs.Path(layoutDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val ident = s"graft-bpe-v1 nMerges=$nMerges minCount=$minCount " +
       s"cols=$textCol " + // code-affecting, invisible to the plan hash
       s"corpus=${docs.queryExecution.analyzed.semanticHash()}"
-    val identPath = new org.apache.hadoop.fs.Path(path, "_graft_ident")
-    val identMatches = fs.exists(identPath) && {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") == ident
-      finally in.close()
-    }
-    if (!identMatches) {
-      if (fs.exists(path)) fs.delete(path, true)
+    PersistedLayout.build(docs.sparkSession, layoutDir, ident) {
       bpeTrain(docs, textCol, nMerges, minCount)
         .coalesce(1) // merge tables are vocabulary-sized: one file
         .write.mode("overwrite").parquet(s"$layoutDir/merges")
-      val out = fs.create(identPath, true)
-      try out.write(ident.getBytes("UTF-8")) finally out.close()
     }
   }
 
   /** Segment `docs` with the merge table stored by [[bpeTrainLayout]] —
     * the apply-only serving path: read the (vocabulary-sized) merges in
     * rank order, then [[bpeSegment]]'s histogram-grain fold. Fails
-    * loudly when no completed layout exists (the ident is written after
-    * the merges, so its presence proves a complete build). */
+    * loudly when the layout is not servable. */
   def bpeSegmentFromLayout(docs: DataFrame, textCol: String,
-      layoutDir: String, chunkEvery: Int = 50): DataFrame = {
-    val spark = docs.sparkSession
-    val identPath = new org.apache.hadoop.fs.Path(layoutDir, "_graft_ident")
-    val fs = identPath.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(identPath),
-      s"no completed BPE layout at $layoutDir (run bpeTrainLayout first)")
-    val merges = spark.read.parquet(s"$layoutDir/merges")
+      layoutDir: String, chunkEvery: Int = 50): DataFrame =
+    bpeSegment(docs, textCol, bpeLayoutMerges(docs.sparkSession, layoutDir),
+      chunkEvery)
+
+  /** The merge table of a servable [[bpeTrainLayout]] layout, in rank
+    * order. */
+  private def bpeLayoutMerges(spark: org.apache.spark.sql.SparkSession,
+      layoutDir: String): Seq[(String, String)] = {
+    PersistedLayout.requireServable(spark, layoutDir, "graft-bpe-v")
+    spark.read.parquet(s"$layoutDir/merges")
       .orderBy(col("merge_rank")).collect()
       .map(r => (r.getString(r.fieldIndex("left_sym")),
         r.getString(r.fieldIndex("right_sym")))).toSeq
-    bpeSegment(docs, textCol, merges, chunkEvery)
   }
 
   /** Apply a learned BPE merge table ([[bpeTrain]]'s output order) to
@@ -845,18 +818,9 @@ object TextOps {
     * — the serving composition (stored merges, histogram-grain apply,
     * corpus-grain reassembly). */
   def bpeEncodeFromLayout(docs: DataFrame, idCol: String, textCol: String,
-      layoutDir: String, chunkEvery: Int = 50): DataFrame = {
-    val spark = docs.sparkSession
-    val identPath = new org.apache.hadoop.fs.Path(layoutDir, "_graft_ident")
-    val fs = identPath.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(identPath),
-      s"no completed BPE layout at $layoutDir (run bpeTrainLayout first)")
-    val merges = spark.read.parquet(s"$layoutDir/merges")
-      .orderBy(col("merge_rank")).collect()
-      .map(r => (r.getString(r.fieldIndex("left_sym")),
-        r.getString(r.fieldIndex("right_sym")))).toSeq
-    bpeEncode(docs, idCol, textCol, merges, chunkEvery)
-  }
+      layoutDir: String, chunkEvery: Int = 50): DataFrame =
+    bpeEncode(docs, idCol, textCol,
+      bpeLayoutMerges(docs.sparkSession, layoutDir), chunkEvery)
 
   /** Unigram-LM tokenizer training (Kudo 2018, the SentencePiece unigram
     * model) via Viterbi EM over the word HISTOGRAM — the second half of

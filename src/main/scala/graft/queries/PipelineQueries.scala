@@ -729,8 +729,8 @@ object PipelineQueries {
         // regen reuses the layout): builds on first use; later runs —
         // including bench repetitions — measure the probe alone, which is
         // the serving-path claim; changed corpus data gets a fresh key.
-        // ivfBuildLayout's _graft_ident check guards centEvery/plan
-        // identity on top
+        // ivfBuildLayout's ident check guards centEvery/plan identity on
+        // top
         val key = Tables.contentKey(s"$dir/embeddings.parquet")
         val layout = graft.Scratch.dir(s"graft_ivf_layout_$key")
         Similarity.ivfTopKFromLayout(emb, emb.filter($"vec_id" < 10), k = 5,

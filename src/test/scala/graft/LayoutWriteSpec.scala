@@ -51,6 +51,12 @@ class LayoutWriteSpec extends AnyFunSuite {
     // cell holds 1 (one writer) or 2 (build + append) files — never a
     // per-upstream-task fan. The OFF layout is left unasserted: its
     // file count is whatever AQE's coalescing happened to produce.
+    // Two confs would split a cell's file whatever the clustering does:
+    // a per-file record cap, and speculative duplicate tasks.
+    assert(spark.conf.get("spark.sql.files.maxRecordsPerFile").toLong == 0L,
+      "file counts assume no per-file record cap")
+    assert(!spark.sparkContext.getConf.getBoolean("spark.speculation", false),
+      "file counts assume no speculative tasks")
     val cellDirs = Option(new java.io.File(s"$tmp/on/codes").listFiles())
       .getOrElse(Array.empty).filter(_.getName.startsWith("c_id=")).toSeq
     assert(cellDirs.nonEmpty, "no cell directories written")

@@ -788,17 +788,11 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
     // maxBucket is part of the build identity: a re-run with a different
     // skew cap must REBUILD (ident changes), never serve the old layout
-    def identOf(layout: String): String = {
-      val p = new org.apache.hadoop.fs.Path(layout, "_graft_ident")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    val before = identOf(full)
+    val before = LayoutCrash.ident(full)
     assert(before.contains("maxBucket=1000"), before)
     Dedup.lshIndexWrite(docs.filter($"doc_id" < 400), "doc_id", "text", full,
       maxBucket = 7)
-    val after = identOf(full)
+    val after = LayoutCrash.ident(full)
     assert(after != before && after.contains("maxBucket=7"), after)
     // the rebuilt (tighter-cap) layout still probes without error, and
     // append/probe (no maxBucket in their signature) accept the ident
@@ -905,17 +899,11 @@ class PipelineOpsSpec extends AnyFunSuite {
         graft.Scratch.dir("spec_binsh_nothere"), batch, "media_id", "content")
     }
     // maxBucket is build identity: a different cap re-keys and rebuilds
-    def identOf(layout: String): String = {
-      val p = new org.apache.hadoop.fs.Path(layout, "_graft_ident")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    val before = identOf(full)
+    val before = LayoutCrash.ident(full)
     assert(before.contains("maxBucket=1000"), before)
     Multimodal.binarySimhashIndexWrite(media.filter($"media_id" < 400),
       "media_id", "content", full, maxBucket = 7)
-    val after = identOf(full)
+    val after = LayoutCrash.ident(full)
     assert(after != before && after.contains("maxBucket=7"), after)
     Multimodal.binarySimhashProbeIndex(spark, full, batch,
       "media_id", "content").count()
@@ -1078,30 +1066,24 @@ class PipelineOpsSpec extends AnyFunSuite {
     // ident, rebuilding over the same corpus with a different column is
     // a silent ident hit serving stale data
     import graft.operators.{Dedup, Multimodal}
-    def ident(dir: String): String = {
-      val p = new org.apache.hadoop.fs.Path(dir, "_graft_ident")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
     val media = Multimodal.fabricate(Tables(spark, TestSpark.sf, "documents"))
       .withColumn("content2", col("content"))
     val simhashDir = graft.Scratch.dir("spec_ident_cols_simhash")
     Multimodal.binarySimhashIndexWrite(media, "media_id", "content", simhashDir)
-    val s1 = ident(simhashDir)
+    val s1 = LayoutCrash.ident(simhashDir)
     assert(s1.contains("cols=media_id/content"), s1)
     Multimodal.binarySimhashIndexWrite(media, "media_id", "content2", simhashDir)
-    val s2 = ident(simhashDir)
+    val s2 = LayoutCrash.ident(simhashDir)
     assert(s2.contains("cols=media_id/content2") && s1 != s2,
       s"binCol switch must rebuild, ident stayed '$s2'")
     val docs = Tables(spark, TestSpark.sf, "documents")
       .withColumn("text2", col("text"))
     val lshDir = graft.Scratch.dir("spec_ident_cols_lsh")
     Dedup.lshIndexWrite(docs, "doc_id", "text", lshDir)
-    val l1 = ident(lshDir)
+    val l1 = LayoutCrash.ident(lshDir)
     assert(l1.contains("cols=doc_id/text "), l1)
     Dedup.lshIndexWrite(docs, "doc_id", "text2", lshDir)
-    val l2 = ident(lshDir)
+    val l2 = LayoutCrash.ident(lshDir)
     assert(l2.contains("cols=doc_id/text2") && l1 != l2,
       s"textCol switch must rebuild, ident stayed '$l2'")
     Caches.sweep(spark)

@@ -60,7 +60,7 @@ class RetrievalSpec extends AnyFunSuite {
     assert(viaIndex == mapSide,
       s"index serving diverged: ${viaIndex.diff(mapSide)} vs ${mapSide.diff(viaIndex)}")
     // rebuild with the same corpus is a no-op (ident match)
-    val p = new org.apache.hadoop.fs.Path(dir, "_graft_ident")
+    val p = graft.operators.PersistedLayout.identPath(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val t1 = fs.getFileStatus(p).getModificationTime
     Retrieval.bm25IndexWrite(docs, "doc_id", "text", dir)
@@ -90,15 +90,11 @@ class RetrievalSpec extends AnyFunSuite {
     assert(viaIndex == mapSide,
       s"appended index diverged: ${viaIndex.diff(mapSide)} vs ${mapSide.diff(viaIndex)}")
     // a crashed append leaves the sentinel: serving must refuse
-    val p = new org.apache.hadoop.fs.Path(dir, "_graft_ident")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write("graft-bm25-appending! whatever".getBytes("UTF-8"))
-    finally out.close()
+    LayoutCrash.writeIdent(dir, "graft-bm25-appending! whatever")
     val e2 = intercept[IllegalArgumentException] {
       Retrieval.bm25TopKFromIndex(spark, dir, Seq("table"), k = 5)
     }
-    assert(e2.getMessage.contains("mid-maintenance"))
+    assert(e2.getMessage.contains("not servable"))
     // rebuild heals (sentinel ident never matches → full rebuild)
     Retrieval.bm25IndexWrite(basePart, "doc_id", "text", dir)
     assert(Retrieval.bm25TopKFromIndex(spark, dir, Seq("table"), k = 5)

@@ -121,25 +121,18 @@ class SimilaritySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_sentinel")
       .resolve("layout").toString
     Similarity.ivfBuildLayout(corpus, centEvery = 50, layoutDir = dir)
-    val identPath = new org.apache.hadoop.fs.Path(dir, "_graft_ident")
-    val fs = identPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val valid = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
+    val valid = LayoutCrash.ident(dir)
     // simulate a crash mid-append: the sentinel ident is on disk
-    val out = fs.create(identPath, true)
-    try out.write(s"graft-ivf-appending! $valid".getBytes("UTF-8"))
-    finally out.close()
+    LayoutCrash.writeIdent(dir, s"graft-ivf-appending! $valid")
     val queries = corpus.filter(col("vec_id") < 3)
     val e1 = intercept[IllegalArgumentException] {
       Similarity.ivfTopKServing(spark, queries, k = 3, nProbe = 2, layoutDir = dir)
     }
-    assert(e1.getMessage.contains("in-progress or crashed"))
+    assert(e1.getMessage.contains("not servable"))
     val e2 = intercept[IllegalArgumentException] {
       Similarity.ivfAppendToLayout(corpus.limit(5), dir)
     }
-    assert(e2.getMessage.contains("crashed or in-progress"))
+    assert(e2.getMessage.contains("not servable"))
     // the build path treats the sentinel as an ident mismatch: rebuild,
     // after which serving works again
     Similarity.ivfBuildLayout(corpus, centEvery = 50, layoutDir = dir)
@@ -473,15 +466,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(served.contains(450L),
       s"appended vector invisible to the probe: ${served.mkString(",")}")
     // simulate a crash mid-append: sentinel ident on disk
-    val identPath = new org.apache.hadoop.fs.Path(layout, "_graft_ident")
-    val fs = identPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val ident = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    val out = fs.create(identPath, true)
-    try out.write(("graft-ivfadc-appending! " + ident).getBytes("UTF-8"))
-    finally out.close()
+    LayoutCrash.writeIdent(layout,
+      "graft-ivfadc-appending! " + LayoutCrash.ident(layout))
     intercept[IllegalArgumentException] {
       Similarity.ivfAdcProbeLayout(spark, layout, q, kNN = 5, nProbe = 2)
         .collect()
@@ -513,18 +499,13 @@ class SimilaritySpec extends AnyFunSuite {
     // modulo build first: the later trained build must MISMATCH it
     Similarity.ivfAdcBuildLayout(emb, centEvery = 25, layout,
       "vec_id", "embedding", m = 4, k = 4, quantScale = 1000L)(model)
-    val identPath = new org.apache.hadoop.fs.Path(layout, "_graft_ident")
-    val fs = identPath.getFileSystem(spark.sessionState.newHadoopConf())
-    def ident(): String = {
-      val in = fs.open(identPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
-    val moduloIdent = ident()
+    val moduloIdent = LayoutCrash.ident(layout)
     Similarity.ivfAdcBuildLayout(emb, centEvery = 25, layout,
       "vec_id", "embedding", m = 4, k = 4, quantScale = 1000L,
       trainedIters = 1)(model)
-    assert(ident() != moduloIdent, "kind switch must rebuild the layout")
-    assert(ident().contains("coarse=trainedExact:1"))
+    assert(LayoutCrash.ident(layout) != moduloIdent,
+      "kind switch must rebuild the layout")
+    assert(LayoutCrash.ident(layout).contains("coarse=trainedExact:1"))
     val q = emb.filter($"vec_id" === 0L)
       .select($"embedding".cast("array<double>")).head().getSeq[Double](0)
     val served = Similarity.ivfAdcRerankProbeLayout(spark, layout, emb,
@@ -615,12 +596,7 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.ivfAdcAppendToLayout(batch, dir)
     assert(spark.read.parquet(s"$dir/codes").count() ==
       nBase + batch.count())
-    val ident = {
-      val p = new org.apache.hadoop.fs.Path(dir, "_graft_ident")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val in = fs.open(p)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
+    val ident = LayoutCrash.ident(dir)
     assert(ident.contains("coarse=trainedExact:1"),
       s"append must preserve the quantizer-kind stamp: '$ident'")
     assert(ident.contains("+append="),
